@@ -186,7 +186,7 @@ object PHash {
     HammingBlock.capSample(hs, "img_id", cap)
 
   def phashDedup(s: SparkSession, dir: String): DataFrame = {
-    val hs0 = HammingBlock.ckpt(hashed(s, dir)) // count + both join sides
+    val hs0 = hashed(s, dir).localCheckpoint() // count + both join sides
     pairsOf(capImages(hs0, PairCap)).orderBy("img_a", "img_b")
   }
 

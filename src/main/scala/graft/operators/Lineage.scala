@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** MATERIALIZED SHARED LINEAGE, engine-wide (VERDICT r5 item 2).
+/** MATERIALIZED SHARED LINEAGE, engine-wide: the one session-shared
+  * scope for frames and artifacts.
   *
   * Several query families share an expensive derived frame as their
   * common prefix — the graph tier's basket/edge lists (q49/q50/q52/
@@ -16,35 +17,58 @@ import org.apache.spark.storage.StorageLevel
   * a multi-job deployment writes the same frame as a table (the
   * q68_bucketed_join machinery).
   *
-  * Concurrency contract (ADVICE r5): `getOrElseUpdate` on a TrieMap is
-  * NOT atomic for its side effect — two first callers could both
-  * persist, one frame then being dropped from the map and leaked in
-  * the block manager. Builds are rare (once per (session, dir, key)
-  * for the JVM's life) so a plain global lock around the build is the
-  * simple correct shape; [[clear]] unpersists and resets for tests and
-  * long-lived sessions.
+  * Materialization has two scopes. A frame consumed several times by
+  * ONE query is a bare `df.localCheckpoint()`: Spark's ContextCleaner
+  * frees its blocks once the returned frame is unreachable. A frame
+  * or artifact shared ACROSS queries lives here, keyed by (session,
+  * dir, key), for the session's life. Nothing else holds frames.
+  *
+  * Concurrency contract: `getOrElseUpdate` on a TrieMap is NOT atomic
+  * for its side effect — two first callers could both persist, one
+  * frame then being dropped from the map and leaked in the block
+  * manager. Builds are rare (once per (session, dir, key) for the
+  * JVM's life) so a plain global lock around the build is the simple
+  * correct shape.
   */
 object Lineage {
 
   private val cache = scala.collection.mutable.Map
-    .empty[(SparkSession, String, String), DataFrame]
+    .empty[(SparkSession, String, String), Any]
 
-  /** Wall seconds each key's build took (the BUILD lambda — for
+  private def lineageOff: Boolean =
+    sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")
+
+  /** Self seconds each key's build took (the BUILD lambda — for
     * [[materialized]] that is plan construction, persist() is lazy, so
     * frame keys register near-zero here and their materialization cost
-    * lands on the first consumer; for [[ensure]] it is the full eager
-    * side effect: store writes, trainer loops). Bench emits this as
-    * per-store `store_build_sec` (VERDICT r11 item 1's dedicated
-    * attribution field), and a cold-cost investigation reads the same
-    * numbers from the `lineage: built …` stderr lines.
+    * lands on the first consumer; for [[ensure]] and [[memo]] it is the
+    * full eager work: store writes, trainer loops). Bench emits this as
+    * per-store `store_build_sec`, and a cold-cost investigation reads
+    * the same numbers from the `lineage: built …` stderr lines.
     */
   private val buildWall = scala.collection.mutable.LinkedHashMap
     .empty[(SparkSession, String, String), Double]
 
+  /** Wall seconds of the keys built on this thread inside the build
+    * now running. A key records its SELF time (its wall minus these),
+    * so a key built inside another's build (a trainer's artifacts
+    * inside a store) is counted once, and the recorded seconds sum to
+    * the wall of the outermost builds.
+    */
+  private val nestedSec = new ThreadLocal[Double] {
+    override def initialValue(): Double = 0.0
+  }
+
   private def timed[T](k: (SparkSession, String, String))(f: => T): T = {
     val t0 = System.nanoTime()
-    val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
+    val outer = nestedSec.get
+    nestedSec.set(0.0)
+    var sec = 0.0
+    val r = try f finally {
+      val wall = (System.nanoTime() - t0) / 1e9
+      sec = wall - nestedSec.get
+      nestedSec.set(outer + wall)
+    }
     buildWall.synchronized { buildWall(k) = sec }
     if (sec > 0.5) System.err.println(
       f"lineage: built ${k._2}#${k._3} in $sec%.2f s")
@@ -87,7 +111,7 @@ object Lineage {
   def parallel(s: SparkSession, dir: String,
       builds: Seq[(String, () => DataFrame)],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Unit =
-    if (!sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")) {
+    if (!lineageOff) {
       val missing = cache.synchronized {
         builds.filterNot { case (k, _) => cache.contains((s, dir, k)) }
       }
@@ -99,9 +123,9 @@ object Lineage {
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
         import scala.util.{Failure, Success, Try}
-        // ADVICE r12: each build is wrapped in Try so EVERY future
-        // settles before Await returns — a bare Future.sequence
-        // rethrows on the first failure while sibling builds keep
+        // Each build is wrapped in Try so EVERY future settles
+        // before Await returns — a bare Future.sequence rethrows
+        // on the first failure while sibling builds keep
         // running detached, their persist()-registered frames neither
         // cached nor unpersisted (pinned CacheManager leaks, work
         // silently redone on retry). Survivors are registered (or
@@ -143,6 +167,28 @@ object Lineage {
       }
     }
 
+  /** The value built by `build` on the first call for this (session,
+    * dir, key), returned to every later caller — for shared builds
+    * whose result is not one persisted frame (a trainer's pair of
+    * checkpointed artifact frames).
+    */
+  def memo[T](s: SparkSession, dir: String, key: String)(build: => T): T =
+    // SPARK_GRAFT_LINEAGE=off: run every query on its raw lineage,
+    // no block-manager caching. For harnesses that deliberately
+    // starve the unified pool (SpillProofSpec's 11 MB JVM): cache
+    // write/read buffers there compete with the very operators under
+    // test, while production pre-materializes these frames as real
+    // tables in separate jobs with their own memory. The off switch
+    // reproduces the pre-cache plan shape those gates were written
+    // against.
+    if (lineageOff) build else buildOnce((s, dir, key))(build)
+
+  private def buildOnce[T](k: (SparkSession, String, String))(
+      build: => T): T =
+    cache.synchronized {
+      cache.getOrElseUpdate(k, timed(k)(build)).asInstanceOf[T]
+    }
+
   /** The frame built by `build`, persisted on first use and shared by
     * every later caller with the same (session, dir, key).
     *
@@ -156,70 +202,27 @@ object Lineage {
   def materialized(s: SparkSession, dir: String, key: String,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)(
       build: => DataFrame): DataFrame =
-    // SPARK_GRAFT_LINEAGE=off: run every query on its raw lineage,
-    // no block-manager caching. For harnesses that deliberately
-    // starve the unified pool (SpillProofSpec's 11 MB JVM): cache
-    // write/read buffers there compete with the very operators under
-    // test, while production pre-materializes these frames as real
-    // tables in separate jobs with their own memory. The off switch
-    // reproduces the pre-cache plan shape those gates were written
-    // against.
-    if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")) build
-    else cache.synchronized {
-      cache.getOrElseUpdate((s, dir, key),
-        timed((s, dir, key))(build.persist(level)))
-    }
+    // Off: the raw frame, never persisted (see [[memo]]).
+    if (lineageOff) build else buildOnce((s, dir, key))(build.persist(level))
 
   /** Run `once` the first time this (session, dir, key) is seen — the
     * side-effect twin of [[materialized]] for non-frame shared work
-    * (fixture writes, bucketed-table layouts).
+    * (fixture writes, bucketed-table layouts). Runs under
+    * SPARK_GRAFT_LINEAGE=off too: a store is written once either way.
     */
   def ensure(s: SparkSession, dir: String, key: String)(once: => Unit): Unit =
-    cache.synchronized {
-      cache.getOrElseUpdate((s, dir, key),
-        { timed((s, dir, key))(once); null })
-    }
-
-  /** Caches that live OUTSIDE this map (the two-frame trainer memos)
-    * register a hook so [[clear]] releases them too — artifact
-    * lifetime follows the shared-lineage lifecycle (ADVICE r7).
-    */
-  private val clearHooks = scala.collection.mutable.ArrayBuffer
-    .empty[() => Unit]
-
-  def onClear(hook: () => Unit): Unit =
-    clearHooks.synchronized { clearHooks += hook }
-
-  /** Unpersist every cached frame and forget all keys (tests /
-    * long-lived sessions that switch datasets), then run the
-    * registered external-cache hooks.
-    */
-  def clear(): Unit = {
-    cache.synchronized {
-      cache.values.foreach(df => if (df != null) df.unpersist())
-      cache.clear()
-    }
-    clearHooks.synchronized { clearHooks.toSeq }.foreach(_.apply())
-  }
+    buildOnce((s, dir, key))(once)
 
   /** The keys currently registered for `s` (as `dir#key`). Bench
     * snapshots this around every query run: a key that APPEARS during
     * a run means that run derived — and, as the frame's first
-    * consumer, paid for — the shared build (VERDICT r6 item 5: per-
-    * query bench rows are order-dependent under shared lineage; the
-    * artifact now self-identifies the build-paying rows instead of
-    * leaving the solo-rerun protocol manual).
+    * consumer, paid for — the shared build (per-query bench rows are
+    * order-dependent under shared lineage; the artifact
+    * self-identifies the build-paying rows).
     */
   def keys(s: SparkSession): Set[String] = cache.synchronized {
     cache.keysIterator.collect {
       case (ss, d, k) if ss eq s => s"$d#$k"
     }.toSet
   }
-
-  /** Register a marker key without a frame — for shared builds that
-    * live outside this cache (e.g. the two-frame BPE memo), so Bench's
-    * snapshot diff sees them too.
-    */
-  def note(s: SparkSession, dir: String, key: String): Unit =
-    ensure(s, dir, key)(())
 }

@@ -210,10 +210,6 @@ object VersionedIndex {
       .write.mode("append").partitionBy("pub", "cid")
       .parquet(listsDir(root))
     commit(s, root, Manifest(v, pub, Seq(pub)))
-    // Both consumers (the three writes) have executed; release the
-    // Lloyd memos (the ADVICE-r8 checkpoint-release discipline).
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    releaseCheckpoint(cent); releaseCheckpoint(cb)
     v
   }
 
@@ -452,8 +448,8 @@ object VersionedIndex {
 
   /** INDEX MAINTENANCE LOOP (VERDICT r10 item 6): repeat
     * [[publishSplit]] until the store is balanced — the policy a
-    * 100 TB index runs at publish cadence instead of a hand-issued
-    * single split. Each round splits the CURRENT hottest cell iff it
+    * 100 TB index runs at publish cadence instead of a one-off manual
+    * split. Each round splits the CURRENT hottest cell iff it
     * exceeds `maxRatio` × mean occupancy and commits one snapshot
     * (atomic per round: a reader never sees a half-rebalanced index,
     * and a crash leaves a balanced-so-far store whose next run simply

@@ -68,29 +68,6 @@ import graft.text.{ByteBpe, QualityClassifier, TokenizerStore}
   */
 object PipeIngest {
 
-  /** Pinned localCheckpoints (history keeps, bench shingle sets, the
-    * per-wave frames), released with the shared-lineage lifecycle
-    * (ADVICE r11: these pins previously had no release registration —
-    * repeated store builds in one session accumulated block-manager
-    * storage until session end). Deferred (onClear) rather than
-    * end-of-call release because returned frames may still reference
-    * the checkpoints until the caller evaluates them.
-    */
-  private val issued =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  graft.operators.Lineage.onClear(() => issued.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    issued.foreach(releaseCheckpoint)
-    issued.clear()
-  })
-
-  private def ckpt(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    issued.synchronized { issued += c }
-    c
-  }
-
   private def modelP(path: String) = s"$path/model"
   private def priorsP(path: String) = s"$path/priors"
   private def tokP(path: String) = s"$path/tok"
@@ -143,7 +120,7 @@ object PipeIngest {
     */
   private def buildKeep(s: SparkSession, hist: DataFrame,
       path: String): DataFrame = {
-    val h = hist.transform(ckpt)
+    val h = hist.localCheckpoint()
     val (model, priors) = QualityClassifier.modelOn(s, h)
     model.write.mode("overwrite").parquet(modelP(path))
     priors.write.mode("overwrite").parquet(priorsP(path))
@@ -151,7 +128,7 @@ object PipeIngest {
     val cleanH = CorpusPipeline.extractStage(h)(s)
     val keepH = CorpusPipeline.qualityStage(cleanH,
         s.read.parquet(modelP(path)), s.read.parquet(priorsP(path)))
-      .transform(ckpt)
+      .localCheckpoint()
     keyedShingles(keepH).write.mode("overwrite")
       .parquet(keepShing(path))
     keepH
@@ -175,7 +152,7 @@ object PipeIngest {
     val ev = Dedup.shingleFrame(
         cleanB.select(col("doc_id"), col("clean").as("text")))
       .select(explode(col("shingles")).as("sg")).distinct()
-      .transform(ckpt)
+      .localCheckpoint()
     ev.write.mode("overwrite").parquet(benchSgP(path))
     import s.implicits._
     Seq(Tuple1(Dedup.bloomBytesOf(ev))).toDF("bloom")
@@ -243,12 +220,12 @@ object PipeIngest {
     */
   private def greedyFront(s: SparkSession, path: String, b: DataFrame,
       batchId: Long): (DataFrame, DataFrame, DataFrame) = {
-    val cleanB = CorpusPipeline.extractStage(b)(s).transform(ckpt)
+    val cleanB = CorpusPipeline.extractStage(b)(s).localCheckpoint()
     val keepB = CorpusPipeline.qualityStage(cleanB,
         s.read.parquet(modelP(path)),
         s.read.parquet(priorsP(path)))
-      .transform(ckpt)
-    val shB = keyedShingles(keepB).transform(ckpt)
+      .localCheckpoint()
+    val shB = keyedShingles(keepB).localCheckpoint()
     val prior = staged(s, stShing(path),
         Seq("doc_id", "shingles", "mk"), batchId)
       .fold(s.read.parquet(keepShing(path)))(st =>
@@ -262,7 +239,7 @@ object PipeIngest {
         verified && col("b.doc_id") < col("a.doc_id"))
       .select(col("a.doc_id").as("doc_id"))
     val surv = keepB.join(dropPrior.union(dropSelf).distinct(),
-      Seq("doc_id"), "left_anti").transform(ckpt)
+      Seq("doc_id"), "left_anti").localCheckpoint()
     (keepB, shB, surv)
   }
 
@@ -334,7 +311,7 @@ object PipeIngest {
   def ingestFull(s: SparkSession, path: String, batches: DataFrame,
       checkpoint: String): Unit = {
     import graft.functions.TextHash.tokens
-    val evC = s.read.parquet(benchSgP(path)).transform(ckpt)
+    val evC = s.read.parquet(benchSgP(path)).localCheckpoint()
     val bloomBytes = s.read.parquet(benchBloomP(path))
       .first().getAs[Array[Byte]]("bloom")
     val q = batches.writeStream
@@ -350,14 +327,14 @@ object PipeIngest {
           .filter(col("n_shingles").isNull ||
             col("n_overlap") * CorpusPipeline.ContamFrac
               < col("n_shingles"))
-          .select("doc_id", "clean").transform(ckpt)
+          .select("doc_id", "clean").localCheckpoint()
         // stage 5: greedy span scrub vs span_index ∪ staged(<batch)
         val priorSpans = staged(s, stSpans(path), Seq("span"), batchId)
           .fold(s.read.parquet(spanIdxP(path)).select("span"))(st =>
             s.read.parquet(spanIdxP(path)).select("span")
               .unionByName(st))
         val scrubbed = CorpusPipeline
-          .scrubStageAgainst(decon, priorSpans).transform(ckpt)
+          .scrubStageAgainst(decon, priorSpans).localCheckpoint()
         stageBatch(s, path, shB, surv,
           encodeRows(s, path, scrubbed, batchId), batchId)
         Formats.backfillPartitions(
@@ -439,33 +416,33 @@ object PipeIngest {
           .withColumn("batch_id", lit(b))
           .select("doc_id", "batch_id", "n_pretokens", "n_pieces",
             "pieces_md5")
-          .transform(ckpt)
+          .localCheckpoint()
         val docsRoot = new org.apache.hadoop.fs.Path(docsP(path))
         val miss =
           if (fs.exists(docsRoot))
             d.join(s.read.parquet(docsP(path)).select("doc_id"),
-              Seq("doc_id"), "left_anti").transform(ckpt)
+              Seq("doc_id"), "left_anti").localCheckpoint()
           else d
         appended += Formats.appendCounted(miss, docsP(path))
       }
       if (!gone(stShing(path))) {
         val sh = s.read.parquet(s"${stShing(path)}/batch_id=$b")
-          .select("doc_id", "shingles", "mk").transform(ckpt)
+          .select("doc_id", "shingles", "mk").localCheckpoint()
         val sealedSh = s.read.parquet(keepShing(path))
           .select("doc_id").distinct()
         sh.join(sealedSh, Seq("doc_id"), "left_anti")
-          .transform(ckpt)
+          .localCheckpoint()
           .write.mode("append").parquet(keepShing(path))
       }
       // FULL-chain stores only: seal the batch's post-scrub spans
       // into the span index (same per-table anti-join recovery).
       if (!gone(stSpans(path))) {
         val sp = s.read.parquet(s"${stSpans(path)}/batch_id=$b")
-          .select("doc_id", "span").transform(ckpt)
+          .select("doc_id", "span").localCheckpoint()
         val sealedSp = s.read.parquet(spanIdxP(path))
           .select("doc_id").distinct()
         sp.join(sealedSp, Seq("doc_id"), "left_anti")
-          .transform(ckpt)
+          .localCheckpoint()
           .write.mode("append").parquet(spanIdxP(path))
       }
       Seq(stDocs(path), stShing(path), stSpans(path)).foreach(r =>
@@ -555,11 +532,11 @@ object PipeIngest {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
 
-    val clean = CorpusPipeline.extractStage(corpus)(s).transform(ckpt)
+    val clean = CorpusPipeline.extractStage(corpus)(s).localCheckpoint()
     val keep = CorpusPipeline.qualityStage(clean,
         s.read.parquet(modelP(path)), s.read.parquet(priorsP(path)))
-      .transform(ckpt)
-    val sh = keyedShingles(keep).transform(ckpt)
+      .localCheckpoint()
+    val sh = keyedShingles(keep).localCheckpoint()
     val pairs = sh.as("a")
       .join(sh.as("b"), verified && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -568,15 +545,15 @@ object PipeIngest {
       .join(labels.select(col("node").as("doc_id"), col("c").as("cid")),
         Seq("doc_id"), "left")
       .filter(col("doc_id") === coalesce(col("cid"), col("doc_id")))
-      .select("doc_id", "clean").transform(ckpt)
+      .select("doc_id", "clean").localCheckpoint()
 
     val storeKeep = s.read.parquet(keepShing(path)).select("doc_id")
     val demote = storeKeep
       .join(bkeep.select("doc_id"), Seq("doc_id"), "left_anti")
-      .transform(ckpt)
+      .localCheckpoint()
     val admit = bkeep
       .join(storeKeep, Seq("doc_id"), "left_anti")
-      .transform(ckpt) // ⊆ streamed: build() sealed every history keep
+      .localCheckpoint() // ⊆ streamed: build() sealed every history keep
 
     // ADMIT first (idempotent appends): encode rows + keep shingles,
     // each anti-joined against the live table — a rerun after a crash
@@ -584,16 +561,16 @@ object PipeIngest {
     var admitted = 0L
     if (!admit.isEmpty) {
       val docsRoot = new org.apache.hadoop.fs.Path(docsP(path))
-      val enc = encodeRows(s, path, admit, -1L).transform(ckpt)
+      val enc = encodeRows(s, path, admit, -1L).localCheckpoint()
       val missDocs =
         if (fs.exists(docsRoot))
           enc.join(s.read.parquet(docsP(path)).select("doc_id"),
-            Seq("doc_id"), "left_anti").transform(ckpt)
+            Seq("doc_id"), "left_anti").localCheckpoint()
         else enc
       admitted += Formats.appendCounted(missDocs, docsP(path))
       val missSh = keyedShingles(admit)
         .join(s.read.parquet(keepShing(path)).select("doc_id"),
-          Seq("doc_id"), "left_anti").transform(ckpt)
+          Seq("doc_id"), "left_anti").localCheckpoint()
       missSh.write.mode("append").parquet(keepShing(path))
     }
 
@@ -654,7 +631,7 @@ object PipeIngest {
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
       val docsAllT = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").transform(ckpt)
+        .select("doc_id", "text").localCheckpoint()
       build(s, docsAllT.filter(col("doc_id") % 10 === HistMod), path)
       val src = s"$path/src"
       val ckptDir = s"$path/ckpt"
@@ -701,7 +678,7 @@ object PipeIngest {
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
       val docsAllT = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").transform(ckpt)
+        .select("doc_id", "text").localCheckpoint()
       graft.operators.PhaseLog.phase("pipe_compact artifact build") {
         build(s, docsAllT.filter(col("doc_id") % 10 === HistMod), path)
       }
@@ -753,7 +730,7 @@ object PipeIngest {
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
       val docsAllT = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").transform(ckpt)
+        .select("doc_id", "text").localCheckpoint()
       buildFull(s,
         docsAllT.filter(col("doc_id") % 10 === HistMod),
         docsAllT.filter(col("doc_id") % 10 === EvalMod), path)

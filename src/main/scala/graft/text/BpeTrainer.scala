@@ -93,36 +93,14 @@ object BpeTrainer {
       .select(col("doc_id"), upper(col("t")).as("word"))
 
   /** One build produces TWO shared frames (merge table + final
-    * pieces), so the [[graft.operators.Lineage]] one-key-one-frame
-    * contract does not fit; this is its two-frame twin with the same
-    * once-per-(session, dir) + off-switch semantics. Both frames are
+    * pieces), shared per (session, dir) through
+    * [[graft.operators.Lineage.memo]]. Both frames are
     * localCheckpoint'ed by the build (small: ≤ Merges rows /
     * vocabulary-bounded rows), so later queries replay nothing.
     */
-  private val memo = scala.collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  // Lineage.clear() releases these localCheckpoint'ed artifacts too
-  // (ADVICE r7): unpersist the underlying checkpoint RDDs, then forget.
-  graft.operators.Lineage.onClear(() => memo.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    memo.values.foreach { case (a, b) =>
-      releaseCheckpoint(a); releaseCheckpoint(b)
-    }
-    memo.clear()
-  })
-
   private[graft] def artifacts(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")) train(s, dir)
-    else memo.synchronized {
-      memo.getOrElseUpdate((s, dir), {
-        // Marker so Bench's lineage-build snapshot sees this shared
-        // build too (graft.operators.Lineage.note).
-        graft.operators.Lineage.note(s, dir, "ta_bpe_artifacts")
-        train(s, dir)
-      })
-    }
+    graft.operators.Lineage.memo(s, dir, "ta_bpe_artifacts")(train(s, dir))
 
   /** The training loop (the shared [[BpeCore.mergeLoop]] over a
     * single-character seed). Returns (merges, finalPieces):
@@ -207,9 +185,10 @@ object BpeTrainer {
       .withColumn("nxt", lead(col("sym"), 1).over(wSeq))
     val uni = stream.groupBy(col("sym").as("s1")).agg(count(lit(1)).as("c1"))
     val vDf = stream.agg(countDistinct(col("sym")).as("v"))
-    val bg = BpeCore.ckpt(seq.filter(col("nxt").isNotNull)
+    val bg = seq.filter(col("nxt").isNotNull)
       .select(col("doc_id"), col("pi"), col("sym").as("s1"),
-        col("nxt").as("s2")))
+        col("nxt").as("s2"))
+      .localCheckpoint()
     val bgc = bg.groupBy("s1", "s2").agg(count(lit(1)).as("c2"))
     bg.join(broadcast(bgc), Seq("s1", "s2"))
       .join(broadcast(uni), "s1")

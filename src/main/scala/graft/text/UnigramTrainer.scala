@@ -132,31 +132,13 @@ object UnigramTrainer {
     counts.crossJoin(broadcast(counts.agg(sum("cnt").as("tt"))))
       .select(col("piece"), (ilog2(col("cnt")) - ilog2(col("tt"))).as("sc"))
 
-  /** Two-frame memo, BPE-style: (vocabulary census, full-word
-    * segmentations) from one training run per (session, dir).
+  /** (vocabulary census, full-word segmentations) from one training
+    * run per (session, dir), shared like [[BpeTrainer.artifacts]].
     */
-  private val memo = scala.collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  // Lineage.clear() releases these localCheckpoint'ed artifacts too
-  // (ADVICE r7): unpersist the underlying checkpoint RDDs, then forget.
-  graft.operators.Lineage.onClear(() => memo.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    memo.values.foreach { case (a, b) =>
-      releaseCheckpoint(a); releaseCheckpoint(b)
-    }
-    memo.clear()
-  })
-
   private[graft] def artifacts(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")) train(s, dir)
-    else memo.synchronized {
-      memo.getOrElseUpdate((s, dir), {
-        graft.operators.Lineage.note(s, dir, "ta_unigram_artifacts")
-        train(s, dir)
-      })
-    }
+    graft.operators.Lineage.memo(s, dir, "ta_unigram_artifacts")(
+      train(s, dir))
 
   private def train(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val wf = tokens(s, dir)

@@ -63,4 +63,36 @@ class DriftGuardSpec extends AnyFunSuite {
     assert(stated.forall(_ == (nTests, nSuites)),
       s"README says $stated; test tree has ($nTests tests, $nSuites suites)")
   }
+
+  test("no src/main module outside Lineage keeps a frame registry or memo") {
+    // Query-local frames are bare localCheckpoints the ContextCleaner
+    // frees; session-shared ones go through operators.Lineage. A
+    // module-level collection of DataFrames is a third path that pins
+    // blocks for the JVM's life. Members of a top-level object sit at
+    // two-space indentation; a declaration continues onto the next
+    // line after a trailing `=` or before a leading `.`. The `[^=]`
+    // stops at `=>`, so a map of query functions is no registry.
+    val lineage = Paths.get("src/main/scala/graft/operators/Lineage.scala")
+    val member = "^  (?:private(?:\\[\\w+\\])? )?(?:lazy )?va[lr] \\w+".r
+    val registry = ("(?:ArrayBuffer|ListBuffer)\\s*\\.empty\\[DataFrame\\]" +
+      "|Map\\s*(?:\\.empty)?\\[[^=]*DataFrame").r
+    def declarations(lines: Seq[String]): Seq[(Int, String)] =
+      lines.indices.filter(i => member.findFirstIn(lines(i)).nonEmpty)
+        .map { i =>
+          var j = i
+          while (j + 1 < lines.size && (lines(j).trim.endsWith("=") ||
+              lines(j + 1).trim.startsWith("."))) j += 1
+          (i + 1, lines.slice(i, j + 1).mkString("\n"))
+        }
+    val found = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != lineage)
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toSeq
+        declarations(lines)
+          .filter { case (_, d) => registry.findFirstIn(d).nonEmpty }
+          .map { case (n, _) => s"$p:$n" }
+      }.toSeq
+    assert(found.isEmpty,
+      s"module-level DataFrame registries outside Lineage: $found")
+  }
 }

@@ -308,32 +308,6 @@ class NativeExprEquivalenceSpec extends SparkSpec {
     }
   }
 
-  test("MinhashAgg over exploded shingle rows == array-form signature") {
-    import graft.functions.TextHash._
-    // Array form: per-doc signature from the shingle array.
-    val sh = graft.Tables(spark, sf, "documents")
-      .filter(size(tokens(col("text"))) >= 3)
-      .select(col("doc_id"), tokenHashes(tokens(col("text"))).as("hs"))
-      .select(col("doc_id"), shingles3(col("hs")).as("shingles"))
-    val viaArray = sh
-      .select(col("doc_id"), MinhashSig.minhashNative(col("shingles"), 16)
-        .as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    // Row form: explode, then aggregate with partial-agg merge.
-    val viaAgg = sh
-      .select(col("doc_id"), explode(col("shingles")).as("s"))
-      .groupBy("doc_id")
-      .agg(MinhashAgg.minhashAgg(col("s"), 16).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(viaAgg === viaArray)
-    // And the plan is partial: objHashAggregate with partial stage.
-    val plan = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-      .groupBy("doc_id")
-      .agg(MinhashAgg.minhashAgg(col("s"), 16).as("sig"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_graft_minhash_agg"))
-  }
-
   test("engine results are invariant to shuffle partition count") {
     val a = graft.text.TextAnalysis.fingerprint(spark, sf).collect().toSeq
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

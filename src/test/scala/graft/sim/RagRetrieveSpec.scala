@@ -180,6 +180,18 @@ class RagRetrieveSpec extends SparkSpec {
     }
   }
 
+  test("a held, unevaluated ss_rag_index frame survives serving " +
+    "ss_rag_retrieve and returns the rows it gives alone") {
+    val q = graft.SparkEntry.queries
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val alone = rows(q("ss_rag_index")(spark, sf))
+    assert(alone.nonEmpty)
+    val held = q("ss_rag_index")(spark, sf)
+    q("ss_rag_retrieve")(spark, sf).collect()
+    assert(rows(held) === alone)
+  }
+
   test("fixture: ranking contract and the held-out split") {
     val out = RagRetrieve.ragRetrieve(spark, sf).collect()
     assert(out.nonEmpty)
